@@ -181,10 +181,7 @@ final class CrawlLake(
 
     def writeDir(table: String, df: DataFrame): Option[String] = {
       val dir = rootPath.resolve("data").resolve(table).resolve(f"batch-$batchId%06d").toString
-      val t0 = System.nanoTime()
       df.write.mode("overwrite").parquet(dir)
-      if (sys.env.contains("GRAFT_TRACE"))
-        println(f"[trace] write $table: ${(System.nanoTime() - t0) / 1e9}%.2fs")
       // skip dirs with no rows to keep manifests tight
       val hasData = scala.util.Using.resource(Files.list(Paths.get(dir)))(
         _.iterator().asScala.exists(p => p.getFileName.toString.endsWith(".parquet")))
@@ -283,13 +280,10 @@ final class CrawlLake(
     val spec = bucketed(table)
     val name = catalogName(table)
     dropPartition(table, partitionId)
-    val t0 = System.nanoTime()
     df.withColumn("_pbatch", lit(partitionId))
       .select((spec.schema.fieldNames :+ "_pbatch").map(col).toIndexedSeq: _*)
       .write.mode(SaveMode.Append)
       .insertInto(name)
-    if (sys.env.contains("GRAFT_TRACE"))
-      println(f"[trace] write $table (bucketed): ${(System.nanoTime() - t0) / 1e9}%.2fs")
   }
 
   private def dropPartition(table: String, partitionId: Long): Unit = {

@@ -81,6 +81,14 @@ object SequencePack {
     require(budget >= 1, s"budget must be >= 1, got $budget")
     require(groupSize >= 1, s"groupSize must be >= 1, got $groupSize")
     val n: Column = size(split(TextDedup.normText(col(textCol)), " ", -1)).cast("long")
+    // internal column names, suffixed past any input column they would
+    // shadow (unsuffixed otherwise, which keeps the spec-asserted plan);
+    // case-insensitive, like the analyzer
+    val taken = docs.columns.map(_.toLowerCase).toSet
+    val internal = Seq("_grp", "_cum", "_grp_offset", "_start", "_firstWin", "_lastWin", "_n", "_g")
+    val sfx = Iterator.from(0).map(i => if (i == 0) "" else s"_$i")
+      .find(x => internal.forall(b => !taken((b + x).toLowerCase))).get
+    val Seq(grpC, cumC, offC, startC, firstC, lastC, nC, gC) = internal.map(_ + sfx)
     // contiguous id-range bucket: integral DIV is monotone nondecreasing in
     // the id, so group boundaries never split the pack order; null ids (the
     // window form ordered them first) land in the first group
@@ -98,30 +106,30 @@ object SequencePack {
     // payload-carrying rows in the totals branch (column pruning cannot
     // reach through a reused exchange), which A/B'd 2.8× slower than even
     // the single-reducer form on a 1.28M-row one-pack assembly.
-    val wOff = Window.partitionBy(col(packCol)).orderBy(col("_grp"))
+    val wOff = Window.partitionBy(col(packCol)).orderBy(col(grpC))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val offsets = docs
-      .select(col(packCol), grp.as("_grp"), n.as("_n"))
-      .groupBy(col(packCol), col("_grp"))
-      .agg(sum(col("_n")).as("_g"))
-      .withColumn("_grp_offset", sum(col("_g")).over(wOff) - col("_g"))
-      .select(col(packCol), col("_grp"), col("_grp_offset"))
+      .select(col(packCol), grp.as(grpC), n.as(nC))
+      .groupBy(col(packCol), col(grpC))
+      .agg(sum(col(nC)).as(gC))
+      .withColumn(offC, sum(col(gC)).over(wOff) - col(gC))
+      .select(col(packCol), col(grpC), col(offC))
 
     // phase 3: doc-local INCLUSIVE prefix within the bounded (pack, group)
     // window + broadcast offsets; start = offset + local − n.
-    val wLocal = Window.partitionBy(col(packCol), col("_grp")).orderBy(col(idCol))
+    val wLocal = Window.partitionBy(col(packCol), col(grpC)).orderBy(col(idCol))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     docs
-      .select((passthrough :+ n.as("n_tokens") :+ grp.as("_grp")): _*)
-      .withColumn("_cum", sum(col("n_tokens")).over(wLocal))
-      .join(broadcast(offsets), Seq(packCol, "_grp"))
-      .withColumn("_start", col("_grp_offset") + col("_cum") - col("n_tokens"))
-      .withColumn("_firstWin", expr("CAST(_start DIV " + budget + " AS BIGINT)"))
-      .withColumn("_lastWin", expr(s"CAST((_start + n_tokens - 1) DIV $budget AS BIGINT)"))
-      .withColumn("window_idx", explode(sequence(col("_firstWin"), col("_lastWin"))))
-      .withColumn("tok_from", greatest(col("window_idx") * B - col("_start"), lit(0L)))
-      .withColumn("tok_to", least((col("window_idx") + 1) * B - col("_start"), col("n_tokens")))
-      .drop("_grp", "_cum", "_grp_offset", "_start", "_firstWin", "_lastWin")
+      .select((passthrough :+ n.as("n_tokens") :+ grp.as(grpC)): _*)
+      .withColumn(cumC, sum(col("n_tokens")).over(wLocal))
+      .join(broadcast(offsets), Seq(packCol, grpC))
+      .withColumn(startC, col(offC) + col(cumC) - col("n_tokens"))
+      .withColumn(firstC, expr(s"CAST(`$startC` DIV $budget AS BIGINT)"))
+      .withColumn(lastC, expr(s"CAST((`$startC` + n_tokens - 1) DIV $budget AS BIGINT)"))
+      .withColumn("window_idx", explode(sequence(col(firstC), col(lastC))))
+      .withColumn("tok_from", greatest(col("window_idx") * B - col(startC), lit(0L)))
+      .withColumn("tok_to", least((col("window_idx") + 1) * B - col(startC), col("n_tokens")))
+      .drop(grpC, cumC, offC, startC, firstC, lastC)
   }
 
   /** Materialize the actual window text from the [[packWindows]] map: each

@@ -48,8 +48,10 @@ object VecKernels {
   /** `CAST(round(v) AS BIGINT)` with Spark's exact double semantics:
     * Round(double) goes through BigDecimal.valueOf (the SHORTEST decimal
     * string — NOT floor(v+0.5): 11.4999999999999996 prints as "11.5" and
-    * HALF_UP gives 12) with NaN→0 and ±∞/overflow clamped like the
-    * non-ANSI double→long cast. */
+    * HALF_UP gives 12) and returns a DOUBLE, which the cast then truncates
+    * (above 2^53 the shortest decimal is not the double's exact integer
+    * value, so the double round trip matters); NaN→0 and ±∞/overflow
+    * clamped like the non-ANSI double→long cast. */
   private def roundToLong(v: Double): Long =
     if (java.lang.Double.isNaN(v)) 0L
     else if (java.lang.Double.isInfinite(v)) { if (v > 0) Long.MaxValue else Long.MinValue }
@@ -57,7 +59,7 @@ object VecKernels {
       val bd = java.math.BigDecimal.valueOf(v).setScale(0, java.math.RoundingMode.HALF_UP)
       if (bd.compareTo(LongMaxBD) > 0) Long.MaxValue
       else if (bd.compareTo(LongMinBD) < 0) Long.MinValue
-      else bd.longValue()
+      else bd.doubleValue().toLong
     }
 
   /** Σ round(a(i)·1000)·round(b(i)·1000) as int64 — the integer-quantized

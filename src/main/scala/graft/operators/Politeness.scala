@@ -31,7 +31,7 @@ object Politeness {
     Seq(col("priority"), col("depth"), col("discovery_ts"), col("seq_in_page"), col("url_hash"))
 
   /** Seconds covered by one engine tick (tick timestamps advance 60 s —
-    * [[graft.sim.ReferenceSimulator.tickTs]]); a robots `crawl_delay` of d
+    * [[graft.crawl.CrawlDriver.tickTs]]); a robots `crawl_delay` of d
     * seconds therefore allows floor(60/d) fetches per tick. */
   val TickSeconds = 60
 

@@ -50,7 +50,7 @@ object LakeMetaBench {
         Encoders.product[graft.model.RobotsEntry]),
       graft.crawl.CrawlConfig(
         budget = 1000, seenPartitions = 8, expectedPerSegment = 4096,
-        maxDepth = 0, collectStats = false,
+        maxDepth = 0,
         seenCompactEvery = 8, lakeCompactEvery = 256))
     driver.init((0L until nPages).map(i =>
       graft.model.Seed(graft.synth.PageSynth.url(i), 0, graft.synth.PageSynth.warcTs(0))))

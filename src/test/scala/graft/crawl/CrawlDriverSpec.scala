@@ -423,6 +423,35 @@ class CrawlDriverSpec extends AnyFunSuite {
     assert(driver.extracted.count() == stats.map(_.fetched).sum)
   }
 
+  test("tick stats equal the committed lineage: fetched/failed/discovered/admitted per tick") {
+    // every 4th non-seed page is missing from the corpus, so some scheduled
+    // urls fail (404) and the stats must split them from the fetched ones
+    val seedHashes = PageSynth.seeds(N, 3).map(s => UrlCanonicalizer.urlHash(s.url)).toSet
+    val present = corpus.zipWithIndex.collect {
+      case (p, i) if i % 4 != 3 || seedHashes.contains(UrlCanonicalizer.urlHash(p.page.url)) => p
+    }
+    val linksOf = present.map(p => UrlCanonicalizer.urlHash(p.page.url) -> p.links.size.toLong).toMap
+    val lake = CrawlLake.forCrawl(Files.createTempDirectory("graft-lake").toString, spark, buckets = 8)
+    val driver = new CrawlDriver(spark, lake, spark.createDataFrame(present.map(_.page)),
+      spark.createDataset(robotsEntries),
+      CrawlConfig(budget = 2, seenPartitions = 8, expectedPerSegment = 4096))
+    driver.init(PageSynth.seeds(N, 3))
+    val stats = (1 to 4).map { _ =>
+      val before = driver.frontier.count()
+      val s = driver.tick()
+      val log = driver.fetchLog.where($"batch_id" === s.batchId)
+        .select("url_hash", "status").as[(Long, Int)].collect()
+      val ok = log.filter(_._2 == 200).map(_._1)
+      assert(s.scheduled == log.length)
+      assert(s.fetched == ok.length)
+      assert(s.failed == log.count(_._2 == 404))
+      assert(s.discovered == ok.map(linksOf).sum)
+      assert(s.admittedNew == driver.frontier.count() - before)
+      s
+    }
+    assert(stats.map(_.failed).sum > 0 && stats.map(_.discovered).sum > 0, stats)
+  }
+
   test("resuming with a different seenPartitions fails fast (seen-geometry drift guard)") {
     // round-5 review: segments are keyed by pmod(url_hash, P); resuming
     // with a grown P passed every range check and silently readmitted

@@ -89,7 +89,7 @@ class RevisitPolicySpec extends AnyFunSuite {
       CrawlConfig(
         budget = p.budget, seenPartitions = 8, expectedPerSegment = 4096,
         maxDepth = 0, maxAttempts = p.maxAttempts, recrawlAfterTicks = p.ttl,
-        hostCooldownTicks = p.cooldown, collectStats = false))
+        hostCooldownTicks = p.cooldown))
     try {
       driver.init(seedUrls.map(u => graft.model.Seed(u, 0, PageSynth.warcTs(0))))
       (1 to ticks).foreach(_ => driver.tick()) // tick(), not run(): no drain stop

@@ -67,6 +67,18 @@ class TextDedupSpec extends AnyFunSuite {
     assert(TextDedup.exactDedup(docs).select("doc_id").as[Long].collect().sorted.toSeq == Seq(1L, 3L, 4L))
   }
 
+  test("exact dedup: null-id rows are dropped and never survive a group") {
+    val withNull = Seq[(java.lang.Long, String)](
+      (null, "the quick brown fox jumps over the lazy dog near the river bank today"), // dup of 1
+      (null, "a text only a null-id row carries"),
+      (1L, "the quick brown fox jumps over the lazy dog near the river bank today"),
+      (4L, "completely unrelated content about spark catalyst optimizer internals and shuffles")
+    ).toDF("doc_id", "text")
+    val kept = TextDedup.exactDedup(withNull).select("doc_id").collect()
+    assert(kept.forall(!_.isNullAt(0)), "a null id survived")
+    assert(kept.map(_.getLong(0)).sorted.toSeq == Seq(1L, 4L))
+  }
+
   test("exact dedup plan: one hash-keyed exchange, pre-shuffle WindowGroupLimit, no self-join") {
     val plan = TextDedup.exactDedup(docs).queryExecution.executedPlan.toString
     assert("Exchange hashpartitioning".r.findAllIn(plan).size == 1, plan)
@@ -313,6 +325,19 @@ class SimilaritySpec extends AnyFunSuite {
     assert(rows(0).getLong(0) == rows(0).getLong(1))
     assert(rows(1).isNullAt(0) && rows(1).isNullAt(1))
     assert(rows(2).isNullAt(0) && rows(2).isNullAt(1))
+
+    // |v·1000| > 2^53: Spark's round yields a DOUBLE before the cast, and
+    // above 2^53 the shortest decimal of v·1000 need not be its exact
+    // integer value (-9.8765432109876531E17 is ...310 as a decimal, ...312
+    // as the double) — the kernel must take the same double round trip
+    val big = Seq[java.lang.Double](-9.876543210987654e14, 1.2345678901234567e14, 9.007199254740993e12)
+    val wide = big.map(v => (Seq[java.lang.Double](v), Seq[java.lang.Double](0.001))).toDF("a", "b")
+    val wideRows = wide.select(
+      Similarity.quantizedDot($"a", $"b").as("k"), hofQ($"a", $"b").as("h")).collect()
+    wideRows.zip(big).foreach { case (r, v) =>
+      assert(r.getLong(0) == r.getLong(1), s"qdot mismatch above 2^53 at $v")
+    }
+    assert(wideRows(0).getLong(0) == -987654321098765312L)
   }
 
   test("brute-force top-k: self-similar vector ranks first when included") {

@@ -116,6 +116,25 @@ class SequencePackSpec extends AnyFunSuite {
     }
   }
 
+  test("internal columns never collide with input columns of the same name") {
+    val want = naive(corpus, 8)
+    // the docs frame already carries columns named like the operator's
+    // internal ones; they pass through untouched and results are unchanged
+    val docs = corpus.toDF("source", "doc_id", "text")
+      .withColumn("_grp", lit("user")).withColumn("_CUM", lit(7L)).withColumn("_start", lit(-1L))
+    val out = SequencePack.packWindows(docs, 8)
+    val got = out
+      .select("source", "doc_id", "n_tokens", "window_idx", "tok_from", "tok_to")
+      .collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))
+      .toSet
+    assert(got == want)
+    assert(out.select("_grp", "_CUM", "_start").distinct().collect().toSeq.map(r =>
+      (r.getString(0), r.getLong(1), r.getLong(2))) == Seq(("user", 7L, -1L)))
+    val assembled = SequencePack.assembleWindows(docs, 8).count()
+    assert(assembled == SequencePack.assembleWindows(corpus.toDF("source", "doc_id", "text"), 8).count())
+  }
+
   test("budget guard") {
     intercept[IllegalArgumentException](
       SequencePack.packWindows(corpus.toDF("source", "doc_id", "text"), 0))

@@ -67,9 +67,8 @@ object ReferenceSimulator {
       seenHashes: Set[Long],
       extractedTexts: Map[Long, String])
 
-  private val seedEpoch = 1577836800000L // 2020-01-01, matches PageSynth.warcTs(0)
-
-  def tickTs(t: Long): Timestamp = new Timestamp(seedEpoch + t * 60000L)
+  /** The engine's batch timestamps ([[graft.crawl.CrawlDriver.tickTs]]). */
+  def tickTs(t: Long): Timestamp = graft.crawl.CrawlDriver.tickTs(t)
 
   /** Generalized multi-tick crawl simulator over a closed synthetic corpus. */
   def crawl(

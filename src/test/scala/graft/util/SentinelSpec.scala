@@ -22,10 +22,4 @@ class SentinelSpec extends AnyFunSuite {
     assert(java.nio.file.Files.list(dir).count() == before, "probe file leaked")
     java.nio.file.Files.delete(dir)
   }
-
-  test("mem sentinel: positive aggregate GB/s at 1 and 2 threads") {
-    val one = graft.tools.CrawlHeadline.memSentinel(1)
-    val two = graft.tools.CrawlHeadline.memSentinel(2)
-    assert(one > 0 && two > 0 && one.isFinite && two.isFinite)
-  }
 }
